@@ -148,6 +148,38 @@ object Bench {
     if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
   }
 
+  /** Wall seconds of one headline query into the noop sink — not count():
+    * count() lets Catalyst PRUNE every projected column, so a
+    * projection-heavy query would time an empty scan. A query that throws
+    * is still timed (the statistic stays comparable), but its failure is
+    * returned and reported, never swallowed. */
+  private def timeQuery(s: SparkSession, name: String,
+                        sfDir: String): (Double, Option[String]) = {
+    val t0 = System.nanoTime()
+    val err =
+      try {
+        SparkEntry.queries(name)(s, sfDir).write.format("noop").mode("overwrite").save()
+        None
+      } catch {
+        case e: Throwable =>
+          System.err.println(s"[bench] $name FAILED: $e")
+          Some(e.toString)
+      }
+    ((System.nanoTime() - t0) / 1e9, err)
+  }
+
+  /** The failed queries of a timed batch as a JSON object, name → error. */
+  private def errorsJson(timed: Seq[(String, (Double, Option[String]))]): String = {
+    def str(s: String): String = s.flatMap {
+      case '"' => "\\\""
+      case '\\' => "\\\\"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    }
+    timed.collect { case (k, (_, Some(e))) => "\"" + k + "\":\"" + str(e) + "\"" }
+      .mkString("{", ",", "}")
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
@@ -196,17 +228,12 @@ object Bench {
     // from all samples; the driver's own uncapped run measures everything)
     if (pairs == 0) {
       val s0 = session(s"local[$cpus]", cpus)
-      val results0 = headline.map { name =>
-        val t0 = System.nanoTime()
-        try { SparkEntry.queries(name)(s0, sfDir)
-          .write.format("noop").mode("overwrite").save() }
-        catch { case _: Throwable => () }
-        name -> (System.nanoTime() - t0) / 1e9
-      }
+      val timed0 = headline.map(name => name -> timeQuery(s0, name, sfDir))
       s0.stop()
+      val results0 = timed0.map { case (k, (sec, _)) => k -> sec }
       val qs0 = results0.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
         .mkString("{", ",", "}")
-      println(f"""{"metric":"headline","value":${results0.map(_._2).sum}%.3f,"unit":"sec","queries":$qs0,"sf":"$sfDir"}""")
+      println(f"""{"metric":"headline","value":${results0.map(_._2).sum}%.3f,"unit":"sec","queries":$qs0,"sf":"$sfDir","errors":${errorsJson(timed0)}}""")
       return
     }
 
@@ -230,16 +257,10 @@ object Bench {
     }
 
     val s1 = session(s"local[$cpus]", cpus)
-    val results = (if (withHeadline) headline else Seq.empty).map { name =>
-      val t0 = System.nanoTime()
-      // noop sink, not count(): count() lets Catalyst PRUNE every projected
-      // column, so a projection-heavy query would time an empty scan
-      try { SparkEntry.queries(name)(s1, sfDir)
-        .write.format("noop").mode("overwrite").save() }
-      catch { case _: Throwable => () }
-      name -> (System.nanoTime() - t0) / 1e9
-    }
+    val timed = (if (withHeadline) headline else Seq.empty)
+      .map(name => name -> timeQuery(s1, name, sfDir))
     s1.stop()
+    val results = timed.map { case (k, (sec, _)) => k -> sec }
     val nT = samples.head._3
     val sec1 = median(samples.map(_._1))
     val sec4 = median(samples.map(_._2))
@@ -254,7 +275,7 @@ object Bench {
     val sampleJson = samples.map(s =>
       f"""{"sec_1exec":${s._1}%.2f,"sec_4exec":${s._2}%.2f}""")
       .mkString("[", ",", "]")
-    println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"sf":"$sfDir","kg_docs":$kgDocs,"kg_triples":$nT,"kg_triples_per_sec_1exec":$tput1%.1f,"kg_triples_per_sec_4exec":$tput4%.1f,"scaling_efficiency":$eff%.3f,"scaling_samples":$sampleJson}""")
+    println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"sf":"$sfDir","kg_docs":$kgDocs,"kg_triples":$nT,"kg_triples_per_sec_1exec":$tput1%.1f,"kg_triples_per_sec_4exec":$tput4%.1f,"scaling_efficiency":$eff%.3f,"scaling_samples":$sampleJson,"errors":${errorsJson(timed)}}""")
 
     // BENCH.md — assembled line-by-line (no stripMargin: generated table rows
     // begin with '|', which stripMargin would eat)

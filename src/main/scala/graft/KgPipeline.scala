@@ -1,8 +1,9 @@
 package graft
 
-import graft.core.{Rules, TableIO}
+import graft.core.{DriverBound, Rules, TableIO}
 import graft.stages._
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 
 /** End-to-end KG-construction dataflow (the north star):
@@ -13,9 +14,13 @@ import org.apache.spark.sql.functions._
   *        ─► canonicalize (alias CC, salted) ─► two-phase triple dedup
   *        ─► vertices / edges materialize
   *
-  * Each stage optionally checkpoints through [[TableIO]] (Iceberg-style
-  * snapshot + lineage manifest); a killed run resumes from the last committed
-  * snapshot, skipping finished stages entirely.
+  * Every run takes the same stages, with or without checkpointing: the dim
+  * side is `kb_triples` → `canon_map`, whose size class (driver fast path
+  * or dataflow) is chosen inside [[KbExpand.expand]] and
+  * [[Canon.canonicalMap]]. Each stage optionally checkpoints through
+  * [[TableIO]] (Iceberg-style snapshot + lineage manifest); a killed run
+  * resumes from the last committed snapshot, skipping finished stages
+  * entirely.
   */
 object KgPipeline {
 
@@ -27,8 +32,8 @@ object KgPipeline {
       .filter(col("s.kind") === "text" && col("s.text").isNotNull)
       .select(col("doc_id"), col("s.offset").as("span_offset"), col("s.text").as("text"))
 
-  /** Canonicalized distinct triple set with provenance. */
-  /** @param dimFastPaths when true, the dimension-bounded passes (KB BFS
+  /** Canonicalized distinct triple set with provenance.
+    * @param dimFastPaths when true, the dimension-bounded passes (KB BFS
     *   closure, alias CC) use their driver fast paths below the collectable
     *   threshold (see KbExpand/Canon docs). The golden P/R suite runs with
     *   false — pure dataflow — so the gate never tests driver code against
@@ -59,7 +64,10 @@ object KgPipeline {
     // input is scanned at most twice, and in-memory caching of fat rows
     // serializes local-mode tasks on the MemoryStore lock (measured: 3/32
     // threads busy during cache build). Only the small dim-side stages
-    // (kb, canon_map) are checkpointed via `small()`.
+    // (kb, canon_map) are checkpointed via `small()` — unless a fast path
+    // already built them driver-side: a LocalRelation is its own
+    // materialization, checkpointing it would cost a job, and the bounded
+    // collect downstream reads it without one.
     def stage(name: String, upstream: Seq[String],
               counters: => Map[String, Long] = Map.empty)
              (f: => DataFrame): DataFrame =
@@ -68,7 +76,8 @@ object KgPipeline {
         case None => f
       }
     def small(df: DataFrame): DataFrame =
-      if (io.isDefined) df else df.localCheckpoint()
+      if (io.isDefined || df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]) df
+      else df.localCheckpoint()
 
     // quarantine metrics — the dataflow image of the reference's println
     // dead-letter paths (FromScrappyDump.kt:166, 179–182, 228–232, 296–299):
@@ -90,129 +99,45 @@ object KgPipeline {
       WeiboTriples.emit(Normalize.blogs(docs), Normalize.comments(docs))
     }
 
-    // FUSED dim phase (no checkpointing io, dims driver-bounded): the KB
-    // closure and the canonical map both derive from dimension-bounded data
-    // the fast paths collect anyway, so compute BOTH fully driver-side and
-    // hand the big job two LocalRelations. vs the staged path this spares
-    // the kb checkpoint, canon count/collect/checkpoint and the kb-join
-    // jobs — measured ~10 small jobs + planning gaps of pure serial driver
-    // latency that lands 1:1 on the small-cluster pipeline wall — and
-    // overlaps the avpair collect with the corpus-wide mention scan.
-    // Falls back to the staged dataflow when a dim exceeds its bound;
-    // KgParitySpec pins fused ≡ dataflow on the triple set. The probe's
-    // ment2ent collect and corpus-wide mention scan are EXPENSIVE — when
-    // the probe bails (avpair over bound, or canonicalMapLocal declining
-    // the quadratic loop) they are handed to the staged path below instead
-    // of being recomputed, so the fallback never pays the dim phase twice.
-    var probedM2e: Array[(String, Seq[String])] = null
-    var probedSeeds: Array[String] = null
-    // set when the m2e dimension exceeds the driver bound: the staged path
-    // below must then not re-attempt the collect (broadcast-trie build) and
-    // routes mention detection through the distributed substring fallback
-    var m2eOverBound = false
-    val fusedDims: Option[(DataFrame, DataFrame)] =
-      if (dimThreshold > 0 && io.isEmpty) {
-        import spark.implicits._
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
-        import scala.concurrent.ExecutionContext.Implicits.global
-        // size guard folded into the collect (limit N+1): one job, and it
-        // runs CONCURRENTLY with the m2e collect + mention scan below
-        val avF = Future {
-          avpair.select(col("entity"), col("pred"), col("obj"))
-            .limit(math.min(dimThreshold, Int.MaxValue - 2L).toInt + 1)
-            .as[(String, String, String)].collect()
-        }
-        // the m2e collect carries the SAME limit-N+1 probe as avpair: a
-        // dictionary 100× the bound must degrade to the dataflow path, not
-        // OOM the driver (the last unguarded dim materialization)
-        val m2eRows = ment2ent.select(col("mention"), col("entities"))
-          .limit(math.min(dimThreshold, Int.MaxValue - 2L).toInt + 1)
-          .as[(String, Seq[String])].collect()
-        if (m2eRows.length > dimThreshold) {
-          m2eOverBound = true
-          Await.result(avF, Duration.Inf) // don't leak the concurrent job
-          None
-        } else {
-        probedM2e = m2eRows
-        val dict = m2eRows.iterator.map(_._1).toSeq.distinct
-        val seeds = Mentions.detect(spark, textSpans(docs), dict)
-          .select(col("mention")).distinct().as[String].collect()
-        probedSeeds = seeds
-        val avRows = Await.result(avF, Duration.Inf)
-        if (avRows.length > dimThreshold) None
-        else {
-          val trace = sys.env.contains("SPARK_GRAFT_DIM_TRACE")
-          def tr(tag: String, t0: Long): Long = {
-            val t = System.nanoTime()
-            if (trace) println(f"[dim] $tag ${(t - t0) / 1e6}%.0fms")
-            t
-          }
-          var t0 = System.nanoTime()
-          val av = avRows.groupBy(_._1)
-          val visited = KbExpand.expandLocal(seeds, m2eRows.toMap, av, Rules.recursivePreds)
-          val kbLocal = KbExpand.triplesLocal(visited, av)
-          t0 = tr("bfs+triples", t0)
-          val cm = Canon.canonicalMapLocal(kbLocal, Rules.categoryPred, Rules.aliasPreds)
-          t0 = tr("canon", t0)
-          val out = cm.map(c => (kbLocal.toDF("subj", "pred", "obj"),
-            c.toDF("name", "comp")))
-          tr("toDF", t0)
-          out
-        }
-        }
-      } else None
-
-    val kb = fusedDims.map(_._1).getOrElse(small(stage("kb_triples", Seq.empty) {
+    // Dim phase: the KB closure and the canonical map are dimension-bounded
+    // (they grow with the dictionary, not the corpus). Below the driver bound
+    // and with dimFastPaths, KbExpand.expand and Canon.canonicalMap compute
+    // them driver-side and return LocalRelations; past it they run as
+    // dataflow. ONE bounded collect of ment2ent feeds both the broadcast-trie
+    // dictionary and (via m2eCollected) the closure's fast path. It is
+    // bounded by dimBound even in pure-dataflow mode — the trie build is
+    // driver-resident regardless of the fast paths; an over-bound dictionary
+    // routes through the DISTRIBUTED substring detect and the dataflow BFS,
+    // where it is never collected or force-broadcast.
+    val kb = small(stage("kb_triples", Seq.empty) {
       import spark.implicits._
-      // ONE collect of the bounded ment2ent dimension feeds both the trie
-      // dictionary and (via m2eCollected) the fast-path closure — the dim
-      // phase is serial driver latency on the critical path, so every
-      // spared job shows up directly in the small-cluster wall. When the
-      // fused probe above already collected the dim and scanned mentions,
-      // reuse both instead of recomputing (the probe-bail path). The
-      // collect carries the limit-N+1 probe (dimBound even in pure-dataflow
-      // mode — the broadcast-trie build is driver-resident regardless of
-      // the dim fast paths); an over-bound dictionary routes through the
-      // DISTRIBUTED substring detect and the dataflow BFS, where the
-      // dictionary is never collected or force-broadcast.
-      val m2eRows =
-        if (probedM2e != null) probedM2e
-        else if (m2eOverBound) null
-        else {
-          val rows = ment2ent.select(col("mention"), col("entities"))
-            .limit(math.min(dimBound, Int.MaxValue - 2L).toInt + 1)
-            .as[(String, Seq[String])].collect()
-          if (rows.length > dimBound) { m2eOverBound = true; null } else rows
-        }
-      if (m2eRows == null) {
-        val mentions = Mentions
-          .detectBySubstring(spark, textSpans(docs), ment2ent.select("mention"))
-          .select(col("mention")).distinct()
-        KbExpand.expand(spark, mentions, ment2ent, avpair, Rules.recursivePreds,
-          driverThreshold = dimThreshold, m2eCollected = None,
-          m2eTooLarge = true)
-      } else {
-        val dict = m2eRows.iterator.map(_._1).toSeq.distinct
-        val mentions =
-          if (probedSeeds != null) probedSeeds.toSeq.toDF("mention")
-          else Mentions.detect(spark, textSpans(docs), dict)
+      DriverBound.collect(
+        ment2ent.select(col("mention"), col("entities")).as[(String, Seq[String])],
+        dimBound) match {
+        case Some(rows) =>
+          val dict = rows.iterator.map(_._1).toSeq.distinct
+          val mentions = Mentions.detect(spark, textSpans(docs), dict)
             .select(col("mention")).distinct()
-        KbExpand.expand(spark, mentions, ment2ent, avpair, Rules.recursivePreds,
-          driverThreshold = dimThreshold,
-          m2eCollected = if (dimThreshold > 0) Some(m2eRows.toMap) else None)
+          KbExpand.expand(spark, mentions, ment2ent, avpair, Rules.recursivePreds,
+            driverThreshold = dimThreshold,
+            m2eCollected = if (dimThreshold > 0) Some(rows.toMap) else None)
+        case None =>
+          val mentions = Mentions
+            .detectBySubstring(spark, textSpans(docs), ment2ent.select("mention"))
+            .select(col("mention")).distinct()
+          KbExpand.expand(spark, mentions, ment2ent, avpair, Rules.recursivePreds,
+            driverThreshold = dimThreshold, m2eTooLarge = true)
       }
-    }))
+    })
 
     val kbT = kb.select(col("subj"), col("pred"), col("obj"),
       lit(null).cast("string").as("doc_id"), lit(-1).as("span_offset"))
 
     // the CC pass runs once and is snapshot-committed: resume never re-iterates
-    val canonMap = fusedDims.map(_._2).getOrElse(
-      small(stage("canon_map", Seq("kb_triples")) {
-        Canon.canonicalMap(kb, Rules.categoryPred, Rules.aliasPreds,
-          ccDriverThreshold = dimThreshold)
-      }))
+    val canonMap = small(stage("canon_map", Seq("kb_triples")) {
+      Canon.canonicalMap(kb, Rules.categoryPred, Rules.aliasPreds,
+        ccDriverThreshold = dimThreshold)
+    })
 
     val triples = stage("triples", Seq("weibo_triples", "kb_triples", "canon_map")) {
       val all = Canon.canonicalize(weibo.unionByName(kbT), canonMap)

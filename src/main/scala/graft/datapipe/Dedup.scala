@@ -420,9 +420,11 @@ object Dedup {
     * of magnitude smaller than the corpus (that is the whole point of the
     * blocking step), so tokenizing every document to verify a few
     * thousand pairs re-reads the lake for nothing — the semi-join prunes
-    * the tokenize/array_distinct work to candidate members only (the
-    * pairs frame is checkpointed by every caller, so deriving the id set
-    * from it is a cheap local re-read, not a recomputation). */
+    * the tokenize/array_distinct work to candidate members only. `pairs`
+    * is read twice (id set and join side). When the caller checkpoints it
+    * (ScrubPipeline with io) the second read is a cheap local re-read;
+    * q_jaccard_pairs and ScrubPipeline without io pass it lazy, so both
+    * reads derive from its lineage (up to the planner's exchange reuse). */
   def jaccardVerify(pairs: DataFrame, docs: DataFrame, idCol: String,
                     textCol: String, threshold: Double): DataFrame = {
     val ids = pairs.select(col("id1").as("id"))

@@ -101,7 +101,8 @@ object Similarity {
     * PROJECTION: zero corpus-side Exchange, vs the previous cross-join +
     * two-phase `max_by` aggregate whose final exchange still carried one
     * (id, v, cid, csim) struct per corpus vector. Tie-break identical:
-    * max rounded cosine (nan-safe ordering), then MIN cid. */
+    * max rounded cosine (nan-safe ordering), then MIN cid. Rows with a
+    * null vector get no cell and are dropped from the result. */
   def assignCells(corpus: DataFrame, cent: DataFrame): DataFrame =
     assignCellsLocal(corpus, centRowsOf(cent))
 
@@ -252,15 +253,21 @@ object Similarity {
       if (dims > 0) {
         // spherical refit: normalize natively, then ONE two-phase hash
         // aggregate (cid → per-dimension means) collected to k tiny rows;
-        // a cell that loses all members keeps its previous centroid
+        // a cell that loses all members keeps its previous centroid. Ragged
+        // vectors: try_element_at reads a missing dimension as null (avg
+        // skips it); a dimension no member has keeps the previous
+        // centroid's component (0.0 if that centroid is short too)
         val avgs = (0 until dims).map(d =>
-          avg(element_at(col("nv"), d + 1)).as(s"m$d"))
+          avg(try_element_at(col("nv"), lit(d + 1))).as(s"m$d"))
         val means = cells
           .select(col("cid"), graft.functions.VecNormalize(col("v")).as("nv"))
           .groupBy("cid").agg(avgs.head, avgs.tail: _*)
           .collect()
-          .map(r => r.getLong(0) ->
-            Array.tabulate(dims)(d => r.getDouble(d + 1))).toMap
+          .map { r =>
+            val prev = cur(r.getLong(0).toInt)
+            r.getLong(0) -> Array.tabulate(dims)(d =>
+              if (r.isNullAt(d + 1)) prev.lift(d).getOrElse(0.0) else r.getDouble(d + 1))
+          }.toMap
         cur = Array.tabulate(cur.length)(c => means.getOrElse(c.toLong, cur(c)))
       }
     }

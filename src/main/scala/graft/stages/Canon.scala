@@ -1,5 +1,6 @@
 package graft.stages
 
+import graft.core.DriverBound
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -108,35 +109,29 @@ object Canon {
   @volatile private[graft] var lastCcRounds: Int = 0
 
   /** Driver union-find over a symmetric edge frame when it fits under
-    * `threshold` — ONE collect job instead of O(rounds) shuffle rounds;
-    * shared by both iterative kernels. The size guard is folded into the
-    * collect itself (`limit(threshold+1)`, check the length — the
-    * KbExpand avpair pattern): a separate count() would cost a second full
-    * materialization of the (possibly lazy) edge subtree per call. */
+    * `threshold` — ONE bounded collect job ([[DriverBound]]) instead of
+    * O(rounds) shuffle rounds; shared by both iterative kernels. */
   private def driverCc(sym: DataFrame, threshold: Long): Option[DataFrame] = {
-    if (threshold <= 0) return None
     val spark = sym.sparkSession
     import spark.implicits._
-    val pairs = sym
-      .limit(math.min(threshold, Int.MaxValue - 2L).toInt + 1)
-      .as[(String, String)].collect()
-    if (pairs.length > threshold) return None
-    val parent = scala.collection.mutable.HashMap[String, String]()
-    def find(x: String): String = {
-      var r = x
-      while (parent.getOrElse(r, r) != r) r = parent(r)
-      var c = x
-      while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-      r
+    DriverBound.collect(sym.as[(String, String)], threshold).map { pairs =>
+      val parent = scala.collection.mutable.HashMap[String, String]()
+      def find(x: String): String = {
+        var r = x
+        while (parent.getOrElse(r, r) != r) r = parent(r)
+        var c = x
+        while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
+        r
+      }
+      pairs.foreach { case (a, b) =>
+        val ra = find(a); val rb = find(b)
+        if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
+      }
+      // sym is symmetric → every node occurs as src
+      val nodes = pairs.iterator.map(_._1).toSet
+      lastCcRounds = 0
+      nodes.iterator.map(n => (n, find(n))).toSeq.toDF("name", "comp")
     }
-    pairs.foreach { case (a, b) =>
-      val ra = find(a); val rb = find(b)
-      if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
-    }
-    // sym is symmetric → every node occurs as src
-    val nodes = pairs.iterator.map(_._1).toSet
-    lastCcRounds = 0
-    Some(nodes.iterator.map(n => (n, find(n))).toSeq.toDF("name", "comp"))
   }
 
   def connectedComponents(edges: DataFrame, salt: Int = 16,
@@ -296,12 +291,11 @@ object Canon {
 
   /** The driver image of the canonical-map dataflow over an already-local
     * KB triple set — labels, containment+alias union-find, non-identity
-    * pairs. Shared by [[canonicalMap]]'s fast path and KgPipeline's fused
-    * dim phase. Returns None when the name set exceeds the quadratic
-    * containment loop's sane bound (callers fall back to the bigram-blocked
-    * dataflow). Semantics identical to the dataflow path — parity-tested in
-    * KgParitySpec. */
-  private[graft] def canonicalMapLocal(
+    * pairs — [[canonicalMap]]'s fast path. Returns None when the name set
+    * exceeds the quadratic containment loop's sane bound (the caller falls
+    * back to the bigram-blocked dataflow). Semantics identical to the
+    * dataflow path — parity-tested in KgParitySpec. */
+  private def canonicalMapLocal(
       rows: Iterable[(String, String, String)], categoryPred: String,
       aliasPreds: Set[String]): Option[Seq[(String, String)]] = {
     val labelMap = scala.collection.mutable.HashMap[String, scala.collection.mutable.Set[String]]()
@@ -354,16 +348,13 @@ object Canon {
         precomputedLabels.isEmpty) {
       val spark = kbTriples.sparkSession
       import spark.implicits._
-      // size guard folded into the collect (limit N+1, check the length) —
-      // one driver job, not a count() followed by a collect()
-      val rows = kbTriples.select("subj", "pred", "obj")
-        .limit(math.min(ccDriverThreshold, Int.MaxValue - 2L).toInt + 1)
-        .as[(String, String, String)].collect()
-      if (rows.length <= ccDriverThreshold)
-        canonicalMapLocal(rows, categoryPred, aliasPreds) match {
-          case Some(cm) => return cm.toDF("name", "comp")
-          case None => () // name set too large for the quadratic loop — dataflow
-        }
+      val fast = DriverBound.collect(
+          kbTriples.select("subj", "pred", "obj").as[(String, String, String)],
+          ccDriverThreshold)
+        // None from canonicalMapLocal: name set too large for the quadratic
+        // loop — dataflow
+        .flatMap(canonicalMapLocal(_, categoryPred, aliasPreds))
+      if (fast.isDefined) return fast.get.toDF("name", "comp")
     }
 
     val labels = precomputedLabels.getOrElse(

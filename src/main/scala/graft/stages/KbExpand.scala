@@ -1,5 +1,6 @@
 package graft.stages
 
+import graft.core.DriverBound
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -24,10 +25,10 @@ import org.apache.spark.sql.functions._
 object KbExpand {
 
   /** The driver BFS walk of the dimension-bounded KB closure — exactly the
-    * reference's HashMap recursion (AbstractSubjectGraph.kt:17–46), shared
-    * by [[expand]]'s fast path and KgPipeline's fused dim phase.
+    * reference's HashMap recursion (AbstractSubjectGraph.kt:17–46), the
+    * core of [[expand]]'s fast path.
     * @return visited entities, sorted (deterministic). */
-  private[graft] def expandLocal(
+  private def expandLocal(
       seedMentions: Iterable[String],
       m2e: Map[String, Seq[String]],
       av: Map[String, Array[(String, String, String)]],
@@ -51,7 +52,7 @@ object KbExpand {
 
   /** Distinct (subj, pred, obj) triples of the visited entities — the local
     * image of `visited ⋈ avpair` (avpair complete by the threshold check). */
-  private[graft] def triplesLocal(
+  private def triplesLocal(
       visited: Seq[String],
       av: Map[String, Array[(String, String, String)]]): Seq[(String, String, String)] =
     visited.iterator.flatMap(e => av.getOrElse(e, Array.empty)).toVector.distinct
@@ -81,40 +82,35 @@ object KbExpand {
     // which it is broadcast — computing the closure in-memory costs 2 jobs
     // instead of O(rounds); this is exactly the reference's HashMap walk
     // (AbstractSubjectGraph.kt:17–46). The dataflow loop below remains the
-    // path for KBs beyond driver memory. The size guard is folded into the
-    // collect itself (limit N+1, check the length) — one driver job, not a
-    // count() followed by a collect(); callers that already hold the
-    // ment2ent dimension pass it via `m2eCollected` to skip that job too.
-    val avLimited = if (driverThreshold > 0)
-      avpair.select("entity", "pred", "obj")
-        .limit(math.min(driverThreshold, Int.MaxValue - 2L).toInt + 1).collect()
-    else Array.empty[org.apache.spark.sql.Row]
-    // BOTH dims must fit the driver for the fast path: the m2e collect
-    // carries the same limit-N+1 probe as avpair (an unguarded collect of a
-    // 100× dictionary would OOM the driver instead of degrading)
-    var m2eOver = m2eTooLarge // caller may have already probed the dim
-    if (driverThreshold > 0 && !m2eOver && avLimited.length <= driverThreshold) {
-      import spark.implicits._
-      val m2e = m2eCollected.getOrElse {
-        val rows = ment2ent.select(col("mention"), col("entities"))
-          .limit(math.min(driverThreshold, Int.MaxValue - 2L).toInt + 1)
-          .as[(String, Seq[String])].collect()
-        if (rows.length > driverThreshold) { m2eOver = true; null }
-        else rows.toMap
-      }
-      if (!m2eOver) {
-        // avLimited holds the COMPLETE avpair table (limit N+1 returned ≤ N)
-        val av = avLimited
-          .map(r => (r.getString(0), r.getString(1), r.getString(2)))
-          .groupBy(_._1)
+    // path for KBs beyond driver memory. Each dim is probed with one
+    // bounded collect (DriverBound); callers that already hold the
+    // ment2ent dimension pass it via `m2eCollected` to skip that job, or
+    // `m2eTooLarge` when their own probe of it overflowed.
+    import spark.implicits._
+    val avRows =
+      if (m2eTooLarge) None
+      else DriverBound.collect(
+        avpair.select(col("entity"), col("pred"), col("obj")).as[(String, String, String)],
+        driverThreshold)
+    // BOTH dims must fit the driver for the fast path; m2e is probed only
+    // once avpair fits (an unguarded collect of a 100× dictionary would OOM
+    // the driver instead of degrading)
+    val m2eProbe = avRows.map(_ => m2eCollected.orElse(DriverBound.collect(
+      ment2ent.select(col("mention"), col("entities")).as[(String, Seq[String])],
+      driverThreshold).map(_.toMap)))
+    (avRows, m2eProbe.flatten) match {
+      case (Some(rows), Some(m2e)) =>
+        // avRows holds the COMPLETE avpair table (the probe returned ≤ N)
+        val av = rows.groupBy(_._1)
         val seeds = mentions.select("mention").as[String].collect()
         // the result is built fully driver-side as a LocalRelation — no
         // join/broadcast/checkpoint jobs; each spared dim-phase job is serial
         // driver latency that lands 1:1 on the small-cluster pipeline wall
         return triplesLocal(expandLocal(seeds, m2e, av, recursivePreds), av)
           .toDF("subj", "pred", "obj")
-      }
+      case _ =>
     }
+    val m2eOver = m2eTooLarge || m2eProbe.contains(None)
 
     // an over-bound dictionary must not be force-broadcast either — let the
     // planner pick the join (AQE broadcasts iff it actually fits)

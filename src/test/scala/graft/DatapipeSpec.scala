@@ -487,6 +487,30 @@ class DatapipeSpec extends AnyFunSuite {
     assert(recallTrained > 0.9, f"trained recall too low: $recallTrained%.3f")
   }
 
+  test("k-means refit tolerates ragged vectors: short dims keep the previous centroid") {
+    // two 4-dim clusters plus a cluster of 2-dim vectors; seed 2 (ids 0..2
+    // seed the layout) is itself short, so its cell has NO member with
+    // dimensions 3 and 4 — their means are null and must fall back rather
+    // than throw (element_at out of bounds under ANSI, or an NPE on the
+    // null mean)
+    val r = new java.util.Random(5)
+    def noisy(v: Seq[Double]) = v.map(_ + 0.1 * r.nextGaussian())
+    val embs = ((0L until 30L).map { i =>
+      (i, i % 3 match {
+        case 0 => noisy(Seq(5.0, 0.0, 1.0, 0.0))
+        case 1 => noisy(Seq(0.0, 5.0, 0.0, 1.0))
+        case _ => noisy(Seq(-3.0, -3.0))
+      })
+    }).toDF("vec_id", "v")
+    val audit = Similarity.trainCentroidsAudited(embs, "vec_id", "v", k = 3, iters = 3)
+    val cents = audit.centroids.as[(Long, Seq[Double])].collect().toMap
+    assert(cents.size === 3)
+    assert(cents.values.forall(cv => cv.size === 4 && cv.forall(x => !x.isNaN)),
+      s"centroids: $cents")
+    assert(cents(2L).drop(2) === Seq(0.0, 0.0), s"short cell: ${cents(2L)}")
+    assert(audit.bestQe.compareTo(audit.seedQe) <= 0)
+  }
+
   test("text stats / quality / langid expressions") {
     val row = docs.filter(col("doc_id") === 0).select(
       TextStats.tokenCount(col("text")).as("n"),

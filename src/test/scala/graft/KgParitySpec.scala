@@ -2,6 +2,7 @@ package graft
 
 import graft.core.TableIO
 import graft.gen.{Corpus, CorpusData}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
@@ -19,22 +20,64 @@ class KgParitySpec extends AnyFunSuite {
   private def m2e = CorpusData.ment2entDF(spark, cfg)
   private def av = CorpusData.avpairDF(spark, cfg)
 
-  private def tripleSet(fast: Boolean): Set[(String, String, String)] =
-    KgPipeline.run(spark, docs, m2e, av, shufflePartitions = 4,
+  private def tripleSet(fast: Boolean,
+                        io: Option[TableIO] = None): Set[(String, String, String)] =
+    KgPipeline.run(spark, docs, m2e, av, io, shufflePartitions = 4,
       dimFastPaths = fast)
       .triples.select("subj", "pred", "obj")
       .as[(String, String, String)].collect().toSet
 
+  /** Spark jobs started while `f` runs. Listener delivery is asynchronous,
+    * so a marker job submitted after `f` closes the window: events arrive
+    * in order, and once the marker's start is seen every earlier one is. */
+  private def jobsDuring(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    val marker = "kg-parity-job-count-marker"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val closed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.job.description") == marker))
+          closed.countDown()
+        else jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      f
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      assert(closed.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      jobs.get
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("dimFastPaths ≡ pure dataflow (identical triple set)") {
+    // three inputs: dataflow, fast paths, and fast paths with checkpointing
     val slow = tripleSet(fast = false)
     val fastS = tripleSet(fast = true)
+    val fastIo = tripleSet(fast = true,
+      Some(new TableIO(spark, Files.createTempDirectory("kgio-fast").toString)))
     assert((slow diff fastS).isEmpty && (fastS diff slow).isEmpty,
       s"diffA=${(slow diff fastS).take(3)} diffB=${(fastS diff slow).take(3)}")
+    assert((slow diff fastIo).isEmpty && (fastIo diff slow).isEmpty,
+      s"diffA=${(slow diff fastIo).take(3)} diffB=${(fastIo diff slow).take(3)}")
+  }
+
+  test("eager run(dimFastPaths = true, io = None) issues at most 2 jobs") {
+    // the eager part of the call is the dim phase; on this fixture the
+    // dims are driver-built LocalRelations, so the only jobs are the
+    // distinct-mention scan's (exchange + result). Checkpointing the
+    // driver-built kb or canon-map frame would add jobs for nothing.
+    val (d, m, a) = (docs, m2e, av)
+    val n = jobsDuring {
+      KgPipeline.run(spark, d, m, a, shufflePartitions = 4, dimFastPaths = true)
+    }
+    assert(n <= 2, s"eager run issued $n jobs")
   }
 
   test("over-bound ment2ent degrades to the distributed detect + dataflow expand, identical triples") {
     // dimBound = 1: every dim collect's limit-N+1 probe overflows, so the
-    // fused phase bails, the broadcast-trie build is skipped, mention
+    // driver fast paths are skipped, the broadcast-trie build is skipped, mention
     // detection runs through Mentions.detectBySubstring, and the BFS runs
     // the dataflow loop with an unforced m2e join — the degradation path a
     // 100× dictionary takes instead of OOMing the driver.
