@@ -1,5 +1,6 @@
 package graft
 
+import graft.core.{Json, Sessions}
 import graft.gen.{Corpus, CorpusData}
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
@@ -47,33 +48,6 @@ object Bench {
     "q_fuzzy_incremental", "q_kg_neo4j_csv", "q_profile_approx",
     "q_lm_score_store")
 
-  private def session(master: String, parts: Int): SparkSession = {
-    val classesDir = new java.io.File("target/scala-2.13/classes").getAbsolutePath
-    val s = SparkSession.builder()
-      .master(master)
-      .appName("graft-bench")
-      .config("spark.executor.extraClassPath", classesDir)
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // AQE's 64m default advisory coalesces the triple-dedup exchange into
-      // multi-million-key partitions whose agg hash maps fall back to
-      // sort+spill (superlinear CPU — measured). 16m keeps per-task maps
-      // cache-resident at every cluster size.
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16m")
-      // don't let the scheduler idle-wait for locality on a 4-JVM local
-      // cluster — delay scheduling is wall-clock noise at this scale
-      .config("spark.locality.wait", "0s")
-      // corpus is ~100 MB, not 100 TB: proportional split size so scan
-      // parallelism is set by the cluster, as the 128 MB default is at scale
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
-
   private val corpusCache = "/tmp/graft-bench-corpus"
 
   private def ensureCorpus(s: SparkSession, nDocs: Int): String = {
@@ -104,7 +78,7 @@ object Bench {
     // (it inflates the 1-exec numerator). AQE coalesces the excess.
     val shuffleParts =
       sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTS", "64").toInt
-    val s = session(master, shuffleParts)
+    val s = Sessions.local(master, shuffleParts, "graft-bench")
     try {
       val cfg = Corpus.Config(nDocs = nDocs)
       val path = ensureCorpus(s, nDocs)
@@ -169,16 +143,8 @@ object Bench {
   }
 
   /** The failed queries of a timed batch as a JSON object, name → error. */
-  private def errorsJson(timed: Seq[(String, (Double, Option[String]))]): String = {
-    def str(s: String): String = s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
-    timed.collect { case (k, (_, Some(e))) => "\"" + k + "\":\"" + str(e) + "\"" }
-      .mkString("{", ",", "}")
-  }
+  private def errorsJson(timed: Seq[(String, (Double, Option[String]))]): String =
+    Json.obj(timed.collect { case (k, (_, Some(e))) => k -> e })
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -214,7 +180,7 @@ object Bench {
     // cluster-size sample otherwise reads the parquet cold from disk and
     // lands as a one-sided outlier
     locally {
-      val warm = session(s"local[$cpus]", cpus)
+      val warm = Sessions.local(s"local[$cpus]", cpus, "graft-bench")
       try {
         ensureCorpus(warm, kgDocs)
         warm.read.parquet(s"$corpusCache-$kgDocs.parquet")
@@ -227,7 +193,7 @@ object Bench {
     // scaling are collected by separate invocations and BENCH.md assembled
     // from all samples; the driver's own uncapped run measures everything)
     if (pairs == 0) {
-      val s0 = session(s"local[$cpus]", cpus)
+      val s0 = Sessions.local(s"local[$cpus]", cpus, "graft-bench")
       val timed0 = headline.map(name => name -> timeQuery(s0, name, sfDir))
       s0.stop()
       val results0 = timed0.map { case (k, (sec, _)) => k -> sec }
@@ -256,7 +222,7 @@ object Bench {
       (sec1, sec4, nA)
     }
 
-    val s1 = session(s"local[$cpus]", cpus)
+    val s1 = Sessions.local(s"local[$cpus]", cpus, "graft-bench")
     val timed = (if (withHeadline) headline else Seq.empty)
       .map(name => name -> timeQuery(s1, name, sfDir))
     s1.stop()

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.core.Sessions
 
 /** Round-7 optimization harness (NOT part of the driver contract — the
   * frozen driver bench is [[Bench]]; this main exists so per-query work can
@@ -14,34 +14,17 @@ import org.apache.spark.sql.SparkSession
   *                             — write explain("formatted") of each query
   *                               to DIR/<q>_<SUFFIX>.txt
   *
-  * Session confs mirror [[Bench.session]] exactly (same shuffle width =
-  * SPARK_GRAFT_CPUS, AQE, 16m advisory, 4m split, locality 0) so isolated
-  * numbers are comparable to driver-bench headline numbers.
+  * The session is [[Sessions.local]] at the headline's shuffle width
+  * (SPARK_GRAFT_CPUS), so isolated numbers are comparable to driver-bench
+  * headline numbers.
   */
 object BenchExtra {
-
-  private def session(cpus: Int): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench-extra")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16m")
-      .config("spark.locality.wait", "0s")
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val reps = sys.env.getOrElse("REPS", "3").toInt
-    val s = session(cpus)
+    val s = Sessions.local(s"local[$cpus]", cpus, "graft-bench-extra")
     try args.toList match {
       case "plan" :: dir :: suffix :: qs =>
         java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))

@@ -1,8 +1,8 @@
 package graft
 
+import graft.core.Sessions
 import graft.gen.{Corpus, CorpusData}
 import graft.stages.{Export, Normalize, TreeAnalytics}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** spark-submit entry point mirroring the reference's DumpGraphToText main:
@@ -20,17 +20,8 @@ object ExportMain {
     val master = if (args.length > 2) args(2) else
       sys.env.getOrElse("SPARK_MASTER", "local[8]")
 
-    val spark = SparkSession.builder()
-      .master(master)
-      .appName("graft-export")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32").toInt)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(master,
+      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32").toInt, "graft-export")
 
     val cfg = Corpus.Config(nDocs = nDocs)
     val docs = CorpusData.docsDF(spark, cfg)

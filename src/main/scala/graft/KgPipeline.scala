@@ -57,7 +57,8 @@ object KgPipeline {
     // session degrade 22 s → 29 s → 37 s without this and hold 21-24 s
     // with it (the accumulated state starves the fixed-size executors);
     // the GC itself costs well under a second against a multi-second job.
-    if (sys.env.getOrElse("SPARK_GRAFT_ENTRY_GC", "1") != "0") System.gc()
+    // Unconditional: back-to-back benchmark runs in one driver rely on it.
+    System.gc()
 
     // Stage boundaries: snapshot commit when checkpointing. Without io the
     // big stages stay LAZY — with single-pass triple emission each wide

@@ -1,8 +1,7 @@
 package graft
 
-import graft.core.TableIO
+import graft.core.{Sessions, TableIO}
 import graft.gen.{Corpus, CorpusData}
-import org.apache.spark.sql.SparkSession
 
 /** spark-submit entry point for the KG-construction pipeline.
   *
@@ -22,16 +21,7 @@ object PipelineMain {
       sys.env.getOrElse("SPARK_MASTER", "local[8]")
     val shuffleParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32").toInt
 
-    val spark = SparkSession.builder()
-      .master(master)
-      .appName("graft-kg-pipeline")
-      .config("spark.sql.shuffle.partitions", shuffleParts)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(master, shuffleParts, "graft-kg-pipeline")
 
     val cfg = Corpus.Config(nDocs = nDocs)
     val io = new TableIO(spark, outDir)

@@ -1,8 +1,8 @@
 package graft
 
+import graft.core.Sessions
 import graft.gen.{Corpus, CorpusData}
 import graft.stages.{Normalize, TreeGraph}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** spark-submit entry point mirroring the reference's BlogTreeInNeo4j main
@@ -24,17 +24,8 @@ object TreeGraphMain {
     val master = if (args.length > 3) args(3) else
       sys.env.getOrElse("SPARK_MASTER", "local[8]")
 
-    val spark = SparkSession.builder()
-      .master(master)
-      .appName("graft-tree-graph")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32").toInt)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(master,
+      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32").toInt, "graft-tree-graph")
 
     val docs = CorpusData.docsDF(spark, Corpus.Config(nDocs = nDocs))
     val edges = TreeGraph.edges(

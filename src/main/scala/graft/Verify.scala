@@ -1,4 +1,5 @@
 package graft
+import graft.core.{Json, Sessions}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
@@ -10,19 +11,6 @@ import java.nio.file.{Files, Paths}
   * (round-2 postmortem: q_bucketed_join vanished for a round because the
   * error was stderr-only). */
 object Verify {
-
-  /** JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    * — a tab or CR in builder-authored SQL would otherwise make the
-    * driver's json.load fail and silently zero the round's correctness. */
-  private def q(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
 
   /** Run every query, write each result to `outDir/<name>` parquet; returns
     * name → error message for the queries that threw (empty = all green). */
@@ -46,23 +34,13 @@ object Verify {
   /** Always written (empty object when green) so its absence vs emptiness
     * is never ambiguous to the driver or a human reading the round. */
   def writeErrors(outDir: String, errs: Map[String, String]): Unit = {
-    val json = errs.map { case (k, v) => s"${q(k)}: ${q(v)}" }
-      .mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/errors.json"), json)
+    Files.writeString(Paths.get(s"$outDir/errors.json"), Json.obj(errs))
   }
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = Sessions.local(s"local[$cpus]", cpus, "graft-verify")
     new java.io.File(outDir).mkdirs()
     // the KG/tree oracles recompute the queries in DuckDB from the corpus
     // tables materialized here (raw spans/dims + engine-normalized rows)
@@ -80,9 +58,8 @@ object Verify {
       SparkEntry.queries.view.filterKeys(f).toMap)
     errs ++= runQueries(spark, sfDir, outDir, queries)
     writeErrors(outDir, errs)
-    val json = only.fold(SparkEntry.oracleSql)(f =>
-        SparkEntry.oracleSql.view.filterKeys(f).toMap)
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = Json.obj(only.fold(SparkEntry.oracleSql)(f =>
+      SparkEntry.oracleSql.view.filterKeys(f).toMap))
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
     if (errs.nonEmpty) {

@@ -76,13 +76,12 @@ final class TableIO(spark: SparkSession, root: String) {
     spark.read.parquet(dirs: _*)
   }
 
-  /** A counter value from the latest committed manifest of a stage. */
-  def counterOf(stage: String, name: String): Option[Long] = {
-    if (!hasCommitted(stage)) return None
-    val m = manifest(stage)
-    ("\"" + java.util.regex.Pattern.quote(name) + "\":(-?\\d+)").r
-      .findFirstMatchIn(m).map(_.group(1).toLong)
-  }
+  /** A counter value from the latest committed manifest of a stage — read
+    * from its `counters` object only, never from the lineage fields. */
+  def counterOf(stage: String, name: String): Option[Long] =
+    if (!hasCommitted(stage)) None
+    else Option(Json.mapper.readTree(manifest(stage)).path("counters").get(name))
+      .map(_.asLong)
 
   /** Write a new snapshot: data first (to a temp dir), per-partition counts,
     * then the manifest via atomic rename — a crash at any point leaves the
@@ -102,19 +101,17 @@ final class TableIO(spark: SparkSession, root: String) {
       .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
     val rowCount = perPart.map(_._2).sum
 
-    val upstreamJson = upstream.map(s =>
-      s"""{"stage":"${s}","snapshot":${lastCommitted(s)}}""").mkString("[", ",", "]")
-    val partsJson = perPart.map { case (p, n) => s"""{"pid":$p,"rows":$n}""" }
-      .mkString("[", ",", "]")
-    val countersJson = counters.map { case (k2, v) => s""""$k2":$v""" }
-      .mkString("{", ",", "}")
-    val manifest =
-      s"""{"stage":"$stage","snapshot":$k,"row_count":$rowCount,
-         |"upstream":$upstreamJson,"per_partition":$partsJson,
-         |"counters":$countersJson}""".stripMargin.replace("\n", "")
+    val m = Json.mapper.createObjectNode()
+      .put("stage", stage).put("snapshot", k).put("row_count", rowCount)
+    val ups = m.putArray("upstream")
+    upstream.foreach(s => ups.addObject().put("stage", s).put("snapshot", lastCommitted(s)))
+    val parts = m.putArray("per_partition")
+    perPart.foreach { case (p, n) => parts.addObject().put("pid", p).put("rows", n) }
+    val cs = m.putObject("counters")
+    counters.foreach { case (name, v) => cs.put(name, v) }
 
     val mTmp = tmp.resolve("_manifest.json.tmp")
-    Files.writeString(mTmp, manifest)
+    Files.writeString(mTmp, Json.mapper.writeValueAsString(m))
     Files.move(mTmp, tmp.resolve("_manifest.json"), StandardCopyOption.ATOMIC_MOVE)
     // final atomic publish of the whole snapshot directory
     Files.move(tmp, dir, StandardCopyOption.ATOMIC_MOVE)

@@ -750,9 +750,9 @@ object Dedup {
     * no per-word shuffle; only (id, chunk_id, md5, n_words) ever reaches
     * an exchange, and the chunk text never even materializes into the row.
     * The first word always opens chunk 0, so a leading boundary word does
-    * not emit an empty chunk. The aggregate-HOF formulation (interpreted,
-    * one immutable array copy per chunk per token) is retained below as
-    * the parity oracle.
+    * not emit an empty chunk. The aggregate-HOF formulation it replaced
+    * (interpreted, one immutable array copy per chunk per token) is the
+    * test parity oracle.
     */
   def cdcChunks(docs: DataFrame, idCol: String, textCol: String,
                 avgWords: Int = 32): DataFrame =
@@ -761,37 +761,6 @@ object Dedup {
         graft.functions.CdcChunksExpr(col(textCol), avgWords)))
       .select(col(idCol), col("pos").cast("long").as("chunk_id"),
         col("col.h").as("h"), col("col.n_words").as("n_words"))
-
-  private[graft] def cdcChunksHof(docs: DataFrame, idCol: String,
-                                  textCol: String,
-                                  avgWords: Int = 32): DataFrame = {
-    def boundary(w: Column) =
-      (conv(substring(md5(w), 1, 8), 16, 10).cast("long") % avgWords) === 0
-    val zero = struct(
-      array().cast("array<string>").as("done"),
-      lit(null).cast("string").as("cur"))
-    def merge(acc: Column, w: Column) = {
-      val cur = acc.getField("cur")
-      val cut = boundary(w) && cur.isNotNull
-      struct(
-        when(cut, array_append(acc.getField("done"), cur))
-          .otherwise(acc.getField("done")).as("done"),
-        when(cut || cur.isNull, w)
-          .otherwise(concat(cur, lit(" "), w)).as("cur"))
-    }
-    def finish(acc: Column) =
-      when(acc.getField("cur").isNotNull,
-        array_append(acc.getField("done"), acc.getField("cur")))
-        .otherwise(acc.getField("done"))
-    docs
-      .select(col(idCol),
-        aggregate(TextStats.tokens(col(textCol)), zero, merge, finish)
-          .as("chunks"))
-      .select(col(idCol), posexplode(col("chunks")))
-      .select(col(idCol), col("pos").cast("long").as("chunk_id"),
-        md5(col("col")).as("h"),
-        size(split(col("col"), " ")).cast("long").as("n_words"))
-  }
 
   /** First-occurrence dedup over the content-defined chunks: one row per
     * distinct chunk hash with its copy count and the (doc, chunk) that

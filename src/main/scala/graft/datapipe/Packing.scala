@@ -86,8 +86,8 @@ object Packing {
     // unpersisted child — the full corpus scan + tokenization — would be
     // computed twice (once for the sample pass, once for the real
     // exchange). Persisting the ~16-byte (id, n_tokens) projection turns
-    // the sampling pass into a cached-block read. Measured (PackProbe,
-    // 2M docs / 121M tokens, local[32]): end-to-end 18.4 s → 4.2 s (29M tokens/s).
+    // the sampling pass into a cached-block read. Measured (2M docs /
+    // 121M tokens, local[32]): end-to-end 18.4 s → 4.2 s (29M tokens/s).
     val narrow = docs
       .select(col(idCol),
         TextStats.tokenCount(col(textCol)).cast("long").as("n_tokens"))

@@ -15,13 +15,6 @@ import org.apache.spark.sql.functions._
   */
 object Similarity {
 
-  /** Deterministic pseudo-random hyperplane component for (plane p, dim d):
-    * maps md5 to ±1. (Kept for the HOF parity test — the engine path is the
-    * native [[graft.functions.SignBucket]] expression.) */
-  private def planeSign(p: Int, d: Column): Column =
-    when(conv(substring(md5(concat(lit(p.toString), lit("_"), d.cast("string"))),
-      1, 6), 16, 10).cast("long") % 2 === 0, 1.0).otherwise(-1.0)
-
   /** Random-hyperplane sign bucket: `planes` sign bits of the vector's dot
     * products with deterministic ±1 hyperplanes. Native codegen'd
     * expression — one fused primitive loop per row over a sign table
@@ -29,20 +22,6 @@ object Similarity {
     * planes × dims md5 signs per corpus row). */
   def signBucket(v: Column, planes: Int): Column =
     graft.functions.SignBucket(v, planes)
-
-  /** The original higher-order-function formulation, bit-identical by
-    * construction — retained ONLY as the parity oracle for the native
-    * expression (DatapipeSpec). */
-  private[graft] def signBucketHof(v: Column, planes: Int): Column = {
-    val bits = (0 until planes).map { p =>
-      val dot = aggregate(
-        zip_with(v, sequence(lit(0), size(v) - 1),
-          (x, i) => x * planeSign(p, i)),
-        lit(0.0), (acc, x) => acc + x)
-      when(dot >= 0, lit(1L << p)).otherwise(lit(0L))
-    }
-    bits.reduce((a, b) => a.bitwiseOR(b))
-  }
 
   /** Brute-force cosine top-k: for each query vector, the k nearest corpus
     * vectors (excluding self). Query set is broadcast; ties broken by id. */

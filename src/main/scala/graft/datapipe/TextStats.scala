@@ -14,11 +14,8 @@ object TextStats {
   /** whitespace tokenization + a BPE-ish subword count proxy: words plus
     * extra units for every 4 chars of long words. Native byte scan
     * (functions/WsSplit) — the regex split paid a Matcher walk per row on
-    * every shingle/LM/chunk scan; [[tokensRegex]] is the parity oracle. */
+    * every shingle/LM/chunk scan; the regex split is the test parity oracle. */
   def tokens(text: Column): Column = graft.functions.WsSplitExpr(text)
-
-  private[graft] def tokensRegex(text: Column): Column =
-    split(trim(text), "\\s+")
 
   /** Every scalar per-doc counter in ONE text walk — the fused native
     * expression (functions/TextCounts). All the scalar signals below are
@@ -35,27 +32,8 @@ object TextStats {
   def subwordCount(text: Column): Column =
     textCounts(text).getField("subword_count")
 
-  private val stopwords = Seq("the", "a", "of", "and", "to", "in", "is", "it")
-
   def stopwordCount(text: Column): Column =
     textCounts(text).getField("stopword_count")
-
-  // ---- interpreted-HOF formulations, retained ONLY as parity oracles for
-  // the fused expression (DatapipeSpec pins them bit-identical) -------------
-  private[graft] def tokenCountHof(text: Column): Column = size(tokens(text))
-  private[graft] def subwordCountHof(text: Column): Column =
-    aggregate(tokens(text), lit(0),
-      (acc, w) => acc + ceil(length(w) / lit(4.0)).cast("int"))
-  private[graft] def stopwordCountHof(text: Column): Column =
-    size(filter(tokens(text), w => lower(w).isin(stopwords: _*)))
-  private[graft] def distinctTokensHof(text: Column): Column =
-    size(array_distinct(tokens(text)))
-  private[graft] def cjkCountHof(text: Column): Column =
-    length(text) - length(regexp_replace(text, "[\\x{4e00}-\\x{9fff}]", ""))
-  private[graft] def punctCountHof(text: Column): Column =
-    length(text) - length(regexp_replace(text, "[\\.,;:!\\?]", ""))
-  private[graft] def symbolCountHof(text: Column): Column =
-    length(text) - length(regexp_replace(text, "[^A-Za-z0-9 ]", ""))
 
   /** Quality score in [0,1]: length band + punctuation ratio + stopword
     * presence — the usual pre-training heuristics, deterministic and

@@ -111,7 +111,8 @@ object TextCounts {
   @volatile private[graft] var countEvals: Boolean = false
   private[graft] val evals = new java.util.concurrent.atomic.AtomicLong
 
-  /** TextStats.stopwords, pure lowercase ASCII by construction. */
+  /** The quality heuristics' stopword list, pure lowercase ASCII by
+    * construction. */
   private val stopwords: Array[String] =
     Array("the", "a", "of", "and", "to", "in", "is", "it")
 

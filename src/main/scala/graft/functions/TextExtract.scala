@@ -8,8 +8,7 @@ import org.apache.spark.sql.functions._
   *
   * Reference semantics (cited file:line into /root/reference):
   *  - firstMatch: anchored `matchEntire`, group 1 or null (extentFunctions.kt:142–149)
-  *  - extractValues: all matches' group 1 in order (extentFunctions.kt:151–153)
-  *  - regex constants: weibo/FromScrappyDump.kt:38–43, 112–117; weibo/MicroBlog.kt:4–7
+  *  - regex constants: weibo/FromScrappyDump.kt:112–117; weibo/MicroBlog.kt:4
   */
 object TextExtract {
 
@@ -18,68 +17,33 @@ object TextExtract {
   def firstMatch(c: Column, pattern: String): Column =
     nullif(regexp_extract(c, "^" + pattern + "$", 1), lit(""))
 
-  /** F2 — all matches' group 1, in order (Kotlin findAll). */
-  def extractValues(c: Column, pattern: String): Column =
-    regexp_extract_all(c, lit(pattern), lit(1))
-
-  /** First occurrence (Kotlin extractValues(...).first()) — '' when absent. */
-  def extractFirst(c: Column, pattern: String): Column =
-    regexp_extract(c, pattern, 1)
-
-  // ---- reference regexes, verbatim semantics -------------------------------
-  // FromScrappyDump.kt:38 — anchored full-string, lazy prefix: string must
-  // end at the digit run; "转发 17376x" yields no match (→ 0).
-  val numberRegex = ".*?([0-9]+)"
-  // FromScrappyDump.kt:39 / :42 / :43
-  val timeFromXml     = "title=\"(.+?)\""
-  val timeFromXmlText = ">(.+?)</"
-  val quoteUserRegex  = "(@\\S+)[:\\s]*"
-  val topicRegex      = "(#.+?#)"
-  val nicknameRegex   = "nick-name=\"(.+?)\" "
-  // MicroBlog.kt:6–7
-  val blogUrlRegex  = "//weibo\\.com/(.+?)/([A-Za-z0-9]{9}).*"
-  val userUrlIdRegex = "//weibo\\.com/([A-Za-z0-9/]*)"
   // MicroBlog.kt:4 (matches() = full match)
   val validTimeRegex = "^\\d{4}-\\d{2}-\\d{2} \\d{2}:\\d{2}$"
 
   /** F3 — `intOrZero` (FromScrappyDump.kt:74–85): first anchored integer of a
     * stat text like `转发 17376`; null / no-digit-suffix → 0. Native
     * digit-suffix scan (the regex allocated a Matcher + decoded the string
-    * per row on the normalize hot path); [[intOrZeroRegex]] is the parity
-    * oracle. */
+    * per row on the normalize hot path); the regex formulation is the test
+    * parity oracle. */
   def intOrZero(c: Column): Column =
     coalesce(UrlParseExpr.digitSuffix(c).cast("int"), lit(0))
-
-  private[graft] def intOrZeroRegex(c: Column): Column =
-    coalesce(firstMatch(c, numberRegex).cast("int"), lit(0))
 
   /** F4 — `detectTags` (FromScrappyDump.kt:87–97): on the text before the
     * first `//@`, extract `@user` handles then `#topic#` topics, in order.
     * Native fused byte scan (functions/TagScan — the two regexp_extract_all
     * walks decoded + Matcher-allocated per blog row on the emission hot
-    * path); [[detectTagsRegex]] is the parity oracle. */
+    * path); the regex formulation is the test parity oracle. */
   def detectTags(content: Column): Column = DetectTagsExpr(content)
-
-  private[graft] def detectTagsRegex(content: Column): Column = {
-    val top = substring_index(content, "//@", 1)
-    concat(extractValues(top, quoteUserRegex), extractValues(top, topicRegex))
-  }
 
   /** F5 — HTML attribute/text pulls (FromScrappyDump.kt:186–191, 202–221).
     * Native literal-prefix/lazy-group/literal-suffix scans (LazyBetween)
-    * on the normalize hot path; regex formulations kept as parity oracles. */
+    * on the normalize hot path; the regex formulations are test parity
+    * oracles. */
   def titleAttr(c: Column): Column = LazyBetweenExpr(c, "title=\"", "\"")
   def anchorText(c: Column): Column =
     trim(substring_index(LazyBetweenExpr(c, ">", "</"), " 转赞人数", 1))
   def nickName(c: Column): Column =
     trim(LazyBetweenExpr(c, "nick-name=\"", "\" "))
-
-  private[graft] def titleAttrRegex(c: Column): Column =
-    extractFirst(c, timeFromXml)
-  private[graft] def anchorTextRegex(c: Column): Column =
-    trim(substring_index(extractFirst(c, timeFromXmlText), " 转赞人数", 1))
-  private[graft] def nickNameRegex(c: Column): Column =
-    trim(extractFirst(c, nicknameRegex))
 
   /** F7 — output-format validity `\d{4}-\d{2}-\d{2} \d{2}:\d{2}`
     * (FromScrappyDump.kt:116; MicroBlog.kt:4). */
@@ -87,18 +51,11 @@ object TextExtract {
 
   /** F9 — URL parsers (MicroBlog.kt:42–79). "" on no-match — exactly the
     * reference's no-match return. Native byte scans (functions/UrlParse)
-    * with java-regex semantics replicated; the regex formulations below
-    * stay as parity oracles (ExtractSpec pins them bit-identical). */
+    * with java-regex semantics replicated; ExtractSpec pins them
+    * bit-identical to the regex formulations. */
   def url2codedMid(url: Column): Column = UrlParseExpr.blogMid(url)
   def uidFromBlogUrl(url: Column): Column = UrlParseExpr.blogUid(url)
   def uidFromUserUrl(url: Column): Column = UrlParseExpr.userUid(url)
-
-  private[graft] def url2codedMidRegex(url: Column): Column =
-    regexp_extract(url, blogUrlRegex, 2)
-  private[graft] def uidFromBlogUrlRegex(url: Column): Column =
-    regexp_extract(url, blogUrlRegex, 1)
-  private[graft] def uidFromUserUrlRegex(url: Column): Column =
-    regexp_replace(regexp_extract(url, userUrlIdRegex, 1), "u/", "")
 
   /** F6 — `alignTime` (FromScrappyDump.kt:112–160): normalize relative CJK
     * times against the scrap time; branch ORDER is semantic. Pure

@@ -1,8 +1,8 @@
 package graft.streaming
 
 import graft.core.Schemas.Doc
+import graft.core.Sessions
 import graft.gen.{Corpus, CorpusData}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 /** Example/driveable entry for the streaming seam: feeds the synthetic
@@ -15,11 +15,7 @@ object StreamingDemo {
   def main(args: Array[String]): Unit = {
     val tableDir = args.headOption.getOrElse("/tmp/graft-stream-demo")
     val nDocs = if (args.length > 1) args(1).toInt else 300
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local("local[4]", 4, "graft-stream-demo")
     import spark.implicits._
 
     val cfg = Corpus.Config(nDocs = nDocs)

@@ -1,6 +1,7 @@
 package graft
 
 import graft.functions.{Base62, TextExtract => TE}
+import graft.{ParityOracles => PO}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -106,10 +107,10 @@ class ExtractSpec extends AnyFunSuite {
           s"native=${r.get(0)} regex=${r.get(1)} for input ${s.replace("\n", "\\n")}")
       }
     }
-    both(urls, TE.url2codedMid, TE.url2codedMidRegex)
-    both(urls, TE.uidFromBlogUrl, TE.uidFromBlogUrlRegex)
-    both(urls, TE.uidFromUserUrl, TE.uidFromUserUrlRegex)
-    both(stats, TE.intOrZero, TE.intOrZeroRegex)
+    both(urls, TE.url2codedMid, PO.url2codedMidRegex)
+    both(urls, TE.uidFromBlogUrl, PO.uidFromBlogUrlRegex)
+    both(urls, TE.uidFromUserUrl, PO.uidFromUserUrlRegex)
+    both(stats, TE.intOrZero, PO.intOrZeroRegex)
 
     // seeded fuzz over a hostile alphabet (prefix fragments, separators,
     // digits, letters, multibyte, all five line terminators)
@@ -119,20 +120,20 @@ class ExtractSpec extends AnyFunSuite {
       "\u2029", " ", "ABCdef123", "x")
     val fuzz = (1 to 800).map(_ =>
       (0 until rnd.nextInt(8)).map(_ => atoms(rnd.nextInt(atoms.size))).mkString)
-    both(fuzz, TE.url2codedMid, TE.url2codedMidRegex)
-    both(fuzz, TE.uidFromBlogUrl, TE.uidFromBlogUrlRegex)
-    both(fuzz, TE.uidFromUserUrl, TE.uidFromUserUrlRegex)
+    both(fuzz, TE.url2codedMid, PO.url2codedMidRegex)
+    both(fuzz, TE.uidFromBlogUrl, PO.uidFromBlogUrlRegex)
+    both(fuzz, TE.uidFromUserUrl, PO.uidFromUserUrlRegex)
     // compare the raw suffix (pre-cast): a fuzzed 12-digit run would make
     // BOTH formulations throw the same ANSI int-overflow, aborting the
     // comparison rather than disproving parity
     both(fuzz, c => graft.functions.UrlParseExpr.digitSuffix(c),
-      c => TE.firstMatch(c, TE.numberRegex))
+      c => TE.firstMatch(c, PO.numberRegex))
 
     // detectTags: native fused scan vs the two-regex formulation — arrays
     // compared elementwise in match order
     def bothTags(in: Seq[String]): Unit = {
       val got = in.toDF("c")
-        .select(TE.detectTags(col("c")), TE.detectTagsRegex(col("c"))).collect()
+        .select(TE.detectTags(col("c")), PO.detectTagsRegex(col("c"))).collect()
       in.zip(got).foreach { case (s, r) =>
         assert(r.getSeq[String](0) == r.getSeq[String](1),
           s"native=${r.getSeq[String](0)} regex=${r.getSeq[String](1)} for ${s.replace("\n", "\\n")}")
@@ -156,7 +157,7 @@ class ExtractSpec extends AnyFunSuite {
     def bothTok(in: Seq[String]): Unit = {
       import graft.datapipe.TextStats
       val got = in.toDF("c")
-        .select(TextStats.tokens(col("c")), TextStats.tokensRegex(col("c")))
+        .select(TextStats.tokens(col("c")), PO.tokensRegex(col("c")))
         .collect()
       in.zip(got).foreach { case (s, r) =>
         assert(r.getSeq[String](0) == r.getSeq[String](1),
@@ -179,16 +180,16 @@ class ExtractSpec extends AnyFunSuite {
       ">08\u670821\u65e5 22:40 \u8f6c\u8d5e\u4eba\u6570\u8d8510\u4e07;</a>",
       "nick-name=\"\u52a0\u63aa\" r", "nick-name=\"a\"x", "nick-name=\"a\" ",
       "", "plain", "title=\"\u540d \u79f0\" tail")
-    both(htmlCases, TE.titleAttr, TE.titleAttrRegex)
-    both(htmlCases, TE.anchorText, TE.anchorTextRegex)
-    both(htmlCases, TE.nickName, TE.nickNameRegex)
+    both(htmlCases, TE.titleAttr, PO.titleAttrRegex)
+    both(htmlCases, TE.anchorText, PO.anchorTextRegex)
+    both(htmlCases, TE.nickName, PO.nickNameRegex)
     val htmlAtoms = Seq("title=\"", "\"", ">", "</", "nick-name=\"", "\" ",
       "a", " ", "\n", "<", "/", "\u540d", "x")
     val htmlFuzz = (1 to 800).map(_ =>
       (0 until rnd.nextInt(8)).map(_ => htmlAtoms(rnd.nextInt(htmlAtoms.size))).mkString)
-    both(htmlFuzz, TE.titleAttr, TE.titleAttrRegex)
-    both(htmlFuzz, TE.anchorText, TE.anchorTextRegex)
-    both(htmlFuzz, TE.nickName, TE.nickNameRegex)
+    both(htmlFuzz, TE.titleAttr, PO.titleAttrRegex)
+    both(htmlFuzz, TE.anchorText, PO.anchorTextRegex)
+    both(htmlFuzz, TE.nickName, PO.nickNameRegex)
   }
 
   test("nell concept split (FromText.kt:11–21)") {

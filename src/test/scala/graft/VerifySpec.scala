@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
 /** Fail-loud contract of the correctness dump: a throwing query must leave
   * a visible artifact (errors.json) and never silently shrink the query
@@ -38,5 +39,18 @@ class VerifySpec extends AnyFunSuite {
     Verify.writeErrors(out, errs)
     assert(errs.isEmpty)
     assert(Files.readString(Paths.get(s"$out/errors.json")).trim === "{}")
+  }
+
+  test("SparkSession.builder appears in exactly one src/main file: core/Sessions.scala") {
+    // every main shares one measured conf block; a copied builder drifts
+    val root = Paths.get("src/main")
+    val walk = Files.walk(root)
+    val builders =
+      try walk.iterator.asScala
+        .filter(p => p.toString.endsWith(".scala") &&
+          Files.readString(p).contains("SparkSession.builder"))
+        .map(root.relativize(_).toString).toList
+      finally walk.close()
+    assert(builders === List("scala/graft/core/Sessions.scala"))
   }
 }
